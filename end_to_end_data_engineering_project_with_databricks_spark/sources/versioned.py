@@ -18,7 +18,9 @@ Layout:
   — O_EXCL).  A crashed writer leaves orphan data files but never a
   half-visible commit; a concurrent writer loses the create race and
   retries on the new snapshot (optimistic concurrency, same protocol as
-  Delta's log).
+  Delta's log).  Every writing operation goes through the one commit
+  path, :func:`_commit`; MERGE and both DELETEs share one copy-on-write
+  body, :func:`_rewrite_touched`.
 - **Readers never list data directories** — they read the manifest, so
   they see a consistent snapshot regardless of in-flight writes, and
   ``version=`` gives time travel to any retained snapshot.
@@ -79,11 +81,30 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable, Collection
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
+#: optimistic-commit attempts before a writer gives up on a contended table
+_MAX_COMMIT_RETRIES = 10
+#: compact() rewrites live files below this size ...
+_SMALL_FILE_BYTES = 32 * 1024 * 1024
+#: ... into files of about this size (also cluster()'s default target)
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
+#: relative error of cluster()'s approxQuantile bucket boundaries
+_QUANTILE_REL_ERR = 0.001
 
 
 class SchemaMismatchError(ValueError):
@@ -107,30 +128,78 @@ def list_versions(root: str) -> list[int]:
     )
 
 
+def _committed_versions(root: str) -> list[int]:
+    """``list_versions``, raising for a table with no commits."""
+    versions = list_versions(root)
+    if not versions:
+        raise FileNotFoundError(f"no committed versions at {root}")
+    return versions
+
+
 def _read_manifest(root: str, version: int) -> dict:
     with open(_manifest_file(root, version)) as fh:
         return json.load(fh)
 
 
-def _try_commit(root: str, version: int, manifest: dict) -> bool:
-    """Atomically create the next manifest (O_EXCL); False = lost the
-    race.  Stamps ``committed_at`` (unix epoch) — the wall-clock index
-    for timestamp time travel (Delta ``timestampAsOf``)."""
-    manifest["committed_at"] = time.time()
-    try:
-        with open(_manifest_file(root, version), "x") as fh:
-            json.dump(manifest, fh)
-        return True
-    except FileExistsError:
-        return False
+def _commit(root: str, build: Callable[[dict | None], dict | None]) -> int:
+    """The one commit path (optimistic concurrency, as Delta's log).
+
+    ``build(head)`` gets the head manifest (``None`` on a table with no
+    commits) and returns the next manifest, or ``None`` when there is
+    nothing to commit — then the head version is returned.  The loop
+    stamps ``version`` and ``committed_at`` (unix epoch — the wall-clock
+    index for timestamp time travel, Delta ``timestampAsOf``) and
+    creates the manifest with O_EXCL.  Losing that create race re-reads
+    the new head and calls ``build`` again; data files the lost attempt
+    wrote become unreferenced orphans, as in Delta."""
+    for _ in range(_MAX_COMMIT_RETRIES):
+        versions = list_versions(root)
+        head_v = versions[-1] if versions else 0
+        manifest = build(_read_manifest(root, head_v) if versions else None)
+        if manifest is None:
+            return head_v
+        manifest = {"version": head_v + 1, **manifest, "committed_at": time.time()}
+        try:
+            with open(_manifest_file(root, head_v + 1), "x") as fh:
+                json.dump(manifest, fh)
+            return head_v + 1
+        except FileExistsError:
+            pass  # lost the race; retry against the new head
+    raise RuntimeError(f"could not commit to {root} after {_MAX_COMMIT_RETRIES} retries")
+
+
+def _write_files(df: DataFrame, root: str) -> list[str]:
+    """Write ``df`` as one uncommitted file group (invisible until a
+    manifest lists it); returns its Parquet files, sorted."""
+    batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
+    df.write.mode("errorifexists").parquet(batch_dir)
+    return sorted(
+        os.path.join(batch_dir, f) for f in os.listdir(batch_dir) if f.endswith(".parquet")
+    )
+
+
+def _replace_files(
+    head: dict, op: str, removed: Collection[str], added: list[str]
+) -> dict:
+    """The manifest after ``op`` swaps ``removed`` for ``added`` in the
+    head snapshot.  Added files carry no stats (conservatively
+    unprunable); surviving files keep theirs."""
+    kept = [f for f in head["files"] if f not in removed]
+    live = set(kept)
+    return {
+        "operation": op,
+        "schema": head["schema"],
+        "files": kept + added,
+        "stats": {f: s for f, s in head["stats"].items() if f in live},
+    }
+
+
+def _schema_struct(manifest: dict) -> StructType:
+    return StructType.fromJson(json.loads(manifest["schema"]))
 
 
 def _commit_time(root: str, version: int) -> float:
-    """Commit wall-clock; manifests predating the ``committed_at`` field
-    fall back to the manifest file's mtime (same clock, set at create)."""
-    m = _read_manifest(root, version)
-    ts = m.get("committed_at")
-    return float(ts) if ts is not None else os.path.getmtime(_manifest_file(root, version))
+    return float(_read_manifest(root, version)["committed_at"])
 
 
 def version_at_timestamp(root: str, ts: float) -> int:
@@ -179,11 +248,6 @@ def _file_stats(
     """Per-file min/max for ``stats_cols`` — one aggregate over the batch
     grouped by ``_metadata.file_path``.  Values are stored JSON-native
     (numbers/strings); timestamps land as ISO strings."""
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     st = StructType.fromJson(json.loads(schema_json))
     aggs = []
     for c in stats_cols:
@@ -211,7 +275,6 @@ def _file_stats(
 def append(
     df: DataFrame,
     root: str,
-    max_commit_retries: int = 10,
     evolve_schema: bool = False,
     stats_cols: list[str] | None = None,
 ) -> int:
@@ -236,13 +299,7 @@ def append(
     one file and scanning the table."""
     root = os.path.abspath(root)
     os.makedirs(_log_path(root), exist_ok=True)
-    batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
-    df.write.mode("errorifexists").parquet(batch_dir)
-    new_files = sorted(
-        os.path.join(batch_dir, f)
-        for f in os.listdir(batch_dir)
-        if f.endswith(".parquet")
-    )
+    new_files = _write_files(df, root)
     schema_json = df.schema.json()
     new_stats = (
         _file_stats(df.sparkSession, new_files, schema_json, stats_cols)
@@ -250,36 +307,21 @@ def append(
         else {}
     )
 
-    for _ in range(max_commit_retries):
-        versions = list_versions(root)
-        if versions:
-            head = _read_manifest(root, versions[-1])
-            if _schema_key(head["schema"]) != _schema_key(schema_json):
-                if not evolve_schema:
-                    raise SchemaMismatchError(
-                        f"append schema {df.schema.simpleString()} does not match "
-                        f"table schema at {root}"
-                    )
-                schema = _merge_schemas(head["schema"], schema_json)
-            else:
-                schema = head["schema"]  # canonical field order: first commit wins
-            files = head["files"] + new_files
-            stats = {**head.get("stats", {}), **new_stats}
-            next_version = versions[-1] + 1
-        else:
-            files, schema, next_version = new_files, schema_json, 1
-            stats = new_stats
-        manifest = {
-            "version": next_version,
-            "operation": "APPEND",
-            "schema": schema,
-            "files": files,
-            "stats": stats,
-        }
-        if _try_commit(root, next_version, manifest):
-            return next_version
-        # lost the race; retry against the new head
-    raise RuntimeError(f"could not commit to {root} after {max_commit_retries} retries")
+    def build(head: dict | None) -> dict:
+        head = head or {"schema": schema_json, "files": [], "stats": {}}
+        if _schema_key(head["schema"]) != _schema_key(schema_json):
+            if not evolve_schema:
+                raise SchemaMismatchError(
+                    f"append schema {df.schema.simpleString()} does not match "
+                    f"table schema at {root}"
+                )
+            head = {**head, "schema": _merge_schemas(head["schema"], schema_json)}
+        # on a matching schema the head's field order stays: first commit wins
+        manifest = _replace_files(head, "APPEND", (), new_files)
+        manifest["stats"].update(new_stats)
+        return manifest
+
+    return _commit(root, build)
 
 
 def prune_files(manifest: dict, where: tuple) -> list[str]:
@@ -326,25 +368,19 @@ def read(
     root = os.path.abspath(root)
     if version is not None and timestamp is not None:
         raise ValueError("pass version OR timestamp, not both")
-    versions = list_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {root}")
+    versions = _committed_versions(root)
     if timestamp is not None:
         version = version_at_timestamp(root, timestamp)
     v = versions[-1] if version is None else version
     if v not in versions:
         raise ValueError(f"version {v} not in {versions}")
     manifest = _read_manifest(root, v)
-    from pyspark.sql.types import StructType
-
-    st = StructType.fromJson(json.loads(manifest["schema"]))
+    st = _schema_struct(manifest)
     files = manifest["files"] if where is None else prune_files(manifest, where)
     if not files:
         return spark.createDataFrame([], st)
     df = spark.read.schema(st).parquet(*files)
     if where is not None:
-        from pyspark.sql import functions as F
-
         col, lo, hi = where
         if lo is not None:
             df = df.filter(F.col(col) >= lo)
@@ -373,19 +409,18 @@ def table_changes(
     Reads use the to-version schema on both sides so evolved columns
     compare as NULL on pre-evolution files."""
     root = os.path.abspath(root)
-    versions = list_versions(root)
     if to_version is None:
+        versions = _committed_versions(root)
         to_version = versions[-1]
+    else:
+        versions = list_versions(root)
     for v in (from_version, to_version):
         if v not in versions:
             raise ValueError(f"version {v} not in {versions}")
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     mf_from = _read_manifest(root, from_version)
     mf_to = _read_manifest(root, to_version)
     files_from, files_to = set(mf_from["files"]), set(mf_to["files"])
-    st = StructType.fromJson(json.loads(mf_to["schema"]))
+    st = _schema_struct(mf_to)
 
     def _load(files: set[str]) -> DataFrame:
         if not files:
@@ -401,7 +436,62 @@ def table_changes(
     )
 
 
-def merge_upsert(df: DataFrame, root: str, key: str, max_commit_retries: int = 10) -> int:
+def _rewrite_touched(
+    spark: SparkSession,
+    root: str,
+    op: str,
+    touched: Callable[[DataFrame], DataFrame],
+    remainder: Callable[[DataFrame], DataFrame],
+    inserted: DataFrame | None = None,
+) -> int:
+    """The copy-on-write body shared by MERGE and both DELETEs; returns
+    the committed version.
+
+    Only the head's files that hold a touched row are rewritten; every
+    other file carries over into the new manifest by path.  At 100 TB a
+    batch touches a vanishing fraction of files, so the rewrite is
+    O(touched files), exactly like Delta's copy-on-write MERGE/DELETE.
+
+    - ``touched(snapshot)`` -> one-column ``_path`` relation (from
+      ``_metadata.file_path``) of the rows the operation touches; only
+      the distinct FILE PATHS are collected to the driver.
+    - ``remainder(touched_files)`` -> the rows of those files that stay.
+    - ``inserted``: MERGE's source rows, written with the remainder.
+      Without it (DELETE), a file whose rows all go simply drops out of
+      the manifest (no rewrite).
+
+    A lost commit race recomputes the touched set on the new head."""
+    _committed_versions(root)
+
+    def build(head: dict) -> dict:
+        st = _schema_struct(head)
+        if inserted is not None and _schema_key(head["schema"]) != _schema_key(
+            inserted.schema.json()
+        ):
+            raise SchemaMismatchError(
+                f"{op.lower()} schema {inserted.schema.simpleString()} does not "
+                f"match table schema at {root}"
+            )
+        cols = [f.name for f in st.fields]
+        hit: set[str] = set()
+        if head["files"]:
+            paths = touched(spark.read.schema(st).parquet(*head["files"]))
+            # _metadata.file_path is URI-form (file:/... or file:///...);
+            # manifests store plain filesystem paths
+            hit = {urlparse(r._path).path for r in paths.distinct().collect()}
+        rewrite = None if inserted is None else inserted.select(*cols)
+        if hit:
+            kept = remainder(spark.read.schema(st).parquet(*sorted(hit))).select(*cols)
+            rewrite = kept if rewrite is None else kept.unionByName(rewrite)
+        added: list[str] = []
+        if rewrite is not None and (inserted is not None or not rewrite.isEmpty()):
+            added = _write_files(rewrite, root)
+        return _replace_files(head, op, hit, added)
+
+    return _commit(root, build)
+
+
+def merge_upsert(df: DataFrame, root: str, key: str) -> int:
     """Copy-on-write MERGE (upsert) keyed on ``key``: source rows replace
     same-key table rows, unmatched source rows insert.  Returns the
     committed version.
@@ -411,9 +501,7 @@ def merge_upsert(df: DataFrame, root: str, key: str, max_commit_retries: int = 1
     scanning or rewriting the full table per batch, only *files that
     contain a matched key* are rewritten (found via ``_metadata.file_path``
     joined against the batch keys); untouched files carry over into the
-    new manifest by path.  At 100 TB a merge batch touches a vanishing
-    fraction of files, so the rewrite is O(touched files), exactly like
-    Delta's copy-on-write MERGE.
+    new manifest by path (see :func:`_rewrite_touched`).
 
     Concurrency: same optimistic O_EXCL commit as ``append``, but a lost
     race recomputes the touched set against the new head (the previous
@@ -422,79 +510,26 @@ def merge_upsert(df: DataFrame, root: str, key: str, max_commit_retries: int = 1
     MERGE requires a unique source key to be deterministic.  The batch
     keys are broadcast: merge batches are incremental by design; a
     table-sized "merge" should be a rewrite via ``append`` instead."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     root = os.path.abspath(root)
-    spark = df.sparkSession
     src = df.dropDuplicates([key])
     if not list_versions(root):
         return append(src, root)
-
-    for _ in range(max_commit_retries):
-        versions = list_versions(root)
-        head_v = versions[-1]
-        head = _read_manifest(root, head_v)
-        if _schema_key(head["schema"]) != _schema_key(src.schema.json()):
-            raise SchemaMismatchError(
-                f"merge schema {df.schema.simpleString()} does not match "
-                f"table schema at {root}"
-            )
-        st = StructType.fromJson(json.loads(head["schema"]))
-        cols = [f.name for f in st.fields]
-        keys = src.select(key)
-        touched: set[str] = set()
-        if head["files"]:
-            snap = spark.read.schema(st).parquet(*head["files"])
-            paths = (
-                snap.select(F.col(key), F.col("_metadata.file_path").alias("_path"))
-                .join(F.broadcast(keys), key, "left_semi")
-                .select("_path")
-                .distinct()
-                .collect()
-            )
-            # _metadata.file_path is URI-form (file:/... or file:///...);
-            # manifests store plain filesystem paths
-            from urllib.parse import urlparse
-
-            touched = {urlparse(r._path).path for r in paths}
-        survivors = [f for f in head["files"] if f not in touched]
-        rewrite = src.select(*cols)
-        if touched:
-            keep = (
-                spark.read.schema(st)
-                .parquet(*sorted(touched))
-                .join(F.broadcast(keys), key, "left_anti")
-            )
-            rewrite = keep.select(*cols).unionByName(rewrite)
-
-        batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
-        rewrite.write.mode("errorifexists").parquet(batch_dir)
-        new_files = sorted(
-            os.path.join(batch_dir, f)
-            for f in os.listdir(batch_dir)
-            if f.endswith(".parquet")
+    keys = F.broadcast(src.select(key))
+    return _rewrite_touched(
+        df.sparkSession,
+        root,
+        "MERGE",
+        lambda snap: snap.select(
+            F.col(key), F.col("_metadata.file_path").alias("_path")
         )
-        manifest = {
-            "version": head_v + 1,
-            "operation": "MERGE",
-            "schema": head["schema"],
-            "files": survivors + new_files,
-            # rewritten files carry no stats (conservatively unprunable);
-            # surviving files keep theirs
-            "stats": {
-                f: s for f, s in head.get("stats", {}).items() if f in set(survivors)
-            },
-        }
-        if _try_commit(root, head_v + 1, manifest):
-            return head_v + 1
-        # lost the race; recompute touched files on the new head
-    raise RuntimeError(f"could not commit to {root} after {max_commit_retries} retries")
+        .join(keys, key, "left_semi")
+        .select("_path"),
+        lambda rows: rows.join(keys, key, "left_anti"),
+        inserted=src,
+    )
 
 
-def delete_where(
-    spark: SparkSession, root: str, predicate, max_commit_retries: int = 10
-) -> int:
+def delete_where(spark: SparkSession, root: str, predicate) -> int:
     """Copy-on-write DELETE: remove rows matching ``predicate`` (a SQL
     string or Column); returns the committed version.
 
@@ -503,68 +538,21 @@ def delete_where(
     remainder); every other file carries over by path.  Rows where the
     predicate is NULL are kept, matching SQL DELETE semantics.  A file
     whose rows all match simply drops out of the manifest (no rewrite)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     root = os.path.abspath(root)
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    for _ in range(max_commit_retries):
-        versions = list_versions(root)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions at {root}")
-        head_v = versions[-1]
-        head = _read_manifest(root, head_v)
-        st = StructType.fromJson(json.loads(head["schema"]))
-        cols = [f.name for f in st.fields]
-        touched: set[str] = set()
-        if head["files"]:
-            from urllib.parse import urlparse
-
-            snap = spark.read.schema(st).parquet(*head["files"])
-            paths = (
-                snap.filter(pred)
-                .select(F.col("_metadata.file_path").alias("_path"))
-                .distinct()
-                .collect()
-            )
-            touched = {urlparse(r._path).path for r in paths}
-        survivors = [f for f in head["files"] if f not in touched]
-        new_files: list[str] = []
-        if touched:
-            remainder = (
-                spark.read.schema(st)
-                .parquet(*sorted(touched))
-                .filter(~F.coalesce(pred, F.lit(False)))
-                .select(*cols)
-            )
-            if not remainder.isEmpty():
-                batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
-                remainder.write.mode("errorifexists").parquet(batch_dir)
-                new_files = sorted(
-                    os.path.join(batch_dir, f)
-                    for f in os.listdir(batch_dir)
-                    if f.endswith(".parquet")
-                )
-        manifest = {
-            "version": head_v + 1,
-            "operation": "DELETE",
-            "schema": head["schema"],
-            "files": survivors + new_files,
-            "stats": {
-                f: s for f, s in head.get("stats", {}).items() if f in set(survivors)
-            },
-        }
-        if _try_commit(root, head_v + 1, manifest):
-            return head_v + 1
-    raise RuntimeError(f"could not commit to {root} after {max_commit_retries} retries")
+    return _rewrite_touched(
+        spark,
+        root,
+        "DELETE",
+        lambda snap: snap.filter(pred).select(
+            F.col("_metadata.file_path").alias("_path")
+        ),
+        lambda rows: rows.filter(~F.coalesce(pred, F.lit(False))),
+    )
 
 
 def delete_where_keys(
-    spark: SparkSession,
-    root: str,
-    keys: "DataFrame",
-    key_col: str,
-    max_commit_retries: int = 10,
+    spark: SparkSession, root: str, keys: "DataFrame", key_col: str
 ) -> int:
     """Copy-on-write DELETE by key SET: remove every row whose ``key_col``
     appears in the ``keys`` DataFrame; returns the committed version.
@@ -582,125 +570,48 @@ def delete_where_keys(
     ever collected.  NULL keys never match (SQL join semantics), so NULL
     rows are kept — same contract as delete_where's NULL-predicate rule.
     Same file-granularity CoW: untouched files carry over by path."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     root = os.path.abspath(root)
     keys = keys.select(F.col(key_col)).distinct()
-    for _ in range(max_commit_retries):
-        versions = list_versions(root)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions at {root}")
-        head_v = versions[-1]
-        head = _read_manifest(root, head_v)
-        st = StructType.fromJson(json.loads(head["schema"]))
-        cols = [f.name for f in st.fields]
-        touched: set[str] = set()
-        if head["files"]:
-            from urllib.parse import urlparse
-
-            snap = spark.read.schema(st).parquet(*head["files"])
-            paths = (
-                snap.select(
-                    F.col(key_col), F.col("_metadata.file_path").alias("_path")
-                )
-                .join(keys, key_col, "left_semi")
-                .select("_path")
-                .distinct()
-                .collect()
-            )
-            touched = {urlparse(r._path).path for r in paths}
-        survivors = [f for f in head["files"] if f not in touched]
-        new_files: list[str] = []
-        if touched:
-            remainder = (
-                spark.read.schema(st)
-                .parquet(*sorted(touched))
-                .join(keys, key_col, "left_anti")
-                .select(*cols)
-            )
-            if not remainder.isEmpty():
-                batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
-                remainder.write.mode("errorifexists").parquet(batch_dir)
-                new_files = sorted(
-                    os.path.join(batch_dir, f)
-                    for f in os.listdir(batch_dir)
-                    if f.endswith(".parquet")
-                )
-        manifest = {
-            "version": head_v + 1,
-            "operation": "DELETE",
-            "schema": head["schema"],
-            "files": survivors + new_files,
-            "stats": {
-                f: s for f, s in head.get("stats", {}).items() if f in set(survivors)
-            },
-        }
-        if _try_commit(root, head_v + 1, manifest):
-            return head_v + 1
-    raise RuntimeError(f"could not commit to {root} after {max_commit_retries} retries")
+    return _rewrite_touched(
+        spark,
+        root,
+        "DELETE",
+        lambda snap: snap.select(
+            F.col(key_col), F.col("_metadata.file_path").alias("_path")
+        )
+        .join(keys, key_col, "left_semi")
+        .select("_path"),
+        lambda rows: rows.join(keys, key_col, "left_anti"),
+    )
 
 
-def compact(
-    spark: SparkSession,
-    root: str,
-    small_file_bytes: int = 32 * 1024 * 1024,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    max_commit_retries: int = 10,
-) -> int:
+def compact(spark: SparkSession, root: str) -> int:
     """Bin-pack small files (Delta OPTIMIZE): rewrite every live file
-    smaller than ``small_file_bytes`` into ~``target_file_bytes`` files;
-    data is unchanged, only the file layout.  Returns the committed
-    version (the current head if fewer than two small files exist — a
-    no-op needs no commit).
+    smaller than ``_SMALL_FILE_BYTES`` (32 MiB) into files of about
+    ``_TARGET_FILE_BYTES`` (128 MiB); data is unchanged, only the file
+    layout.  Returns the committed version (the current head if fewer
+    than two small files exist — a no-op needs no commit).
 
     Incremental-ingest tables accumulate one small file group per commit;
     at 100 TB that is death by a million 1 MB scans (per-file open cost,
     tiny row groups, no effective column-chunk compression).  Compaction
     is the standing maintenance op that keeps scan parallelism matched to
     data size rather than commit history."""
-    from pyspark.sql.types import StructType
-
     root = os.path.abspath(root)
-    for _ in range(max_commit_retries):
-        versions = list_versions(root)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions at {root}")
-        head_v = versions[-1]
-        head = _read_manifest(root, head_v)
+    _committed_versions(root)
+
+    def build(head: dict) -> dict | None:
         sizes = {f: os.path.getsize(f) for f in head["files"]}
-        small = [f for f, s in sizes.items() if s < small_file_bytes]
+        small = [f for f, s in sizes.items() if s < _SMALL_FILE_BYTES]
         if len(small) < 2:
-            return head_v
-        st = StructType.fromJson(json.loads(head["schema"]))
+            return None
         total = sum(sizes[f] for f in small)
-        n_out = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-        batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
-        (
-            spark.read.schema(st)
-            .parquet(*sorted(small))
-            .coalesce(n_out)
-            .write.mode("errorifexists")
-            .parquet(batch_dir)
-        )
-        new_files = sorted(
-            os.path.join(batch_dir, f)
-            for f in os.listdir(batch_dir)
-            if f.endswith(".parquet")
-        )
-        keep = [f for f in head["files"] if f not in set(small)]
-        manifest = {
-            "version": head_v + 1,
-            "operation": "OPTIMIZE",
-            "schema": head["schema"],
-            "files": keep + new_files,
-            "stats": {
-                f: s for f, s in head.get("stats", {}).items() if f in set(keep)
-            },
-        }
-        if _try_commit(root, head_v + 1, manifest):
-            return head_v + 1
-    raise RuntimeError(f"could not commit to {root} after {max_commit_retries} retries")
+        n_out = max(1, (total + _TARGET_FILE_BYTES - 1) // _TARGET_FILE_BYTES)
+        packed = spark.read.schema(_schema_struct(head)).parquet(*sorted(small))
+        added = _write_files(packed.coalesce(n_out), root)
+        return _replace_files(head, "OPTIMIZE", set(small), added)
+
+    return _commit(root, build)
 
 
 def cluster(
@@ -708,9 +619,7 @@ def cluster(
     root: str,
     cols: list[str],
     bits: int = 6,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    rel_err: float = 0.001,
-    max_commit_retries: int = 10,
+    target_file_bytes: int = _TARGET_FILE_BYTES,
 ) -> int:
     """Z-order clustering (Delta ``OPTIMIZE ... ZORDER BY (cols)``):
     rewrite the live snapshot ordered by the interleaved-bit Z-value of
@@ -740,26 +649,22 @@ def cluster(
     over every subsequent pruned scan.  NULLs bucket to 0 (always kept
     by the conservative stats pruning since their file min/max ignores
     nulls)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     if not 1 <= bits <= 12:
         raise ValueError("bits must be in [1, 12]")
     root = os.path.abspath(root)
-    for _ in range(max_commit_retries):
-        versions = list_versions(root)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions at {root}")
-        head_v = versions[-1]
-        head = _read_manifest(root, head_v)
-        st = StructType.fromJson(json.loads(head["schema"]))
+    _committed_versions(root)
+
+    def build(head: dict) -> dict:
+        st = _schema_struct(head)
         out_cols = [f.name for f in st.fields]
         snap = spark.read.schema(st).parquet(*head["files"])
 
         n_buckets = 1 << bits
         probs = [i / n_buckets for i in range(1, n_buckets)]
         num = {c: F.col(c).cast("double").alias(c) for c in cols}
-        bnds = snap.select(*num.values()).stat.approxQuantile(cols, probs, rel_err)
+        bnds = snap.select(*num.values()).stat.approxQuantile(
+            cols, probs, _QUANTILE_REL_ERR
+        )
 
         z = F.lit(0).cast("long")
         for j, c in enumerate(cols):
@@ -781,31 +686,22 @@ def cluster(
 
         total = sum(os.path.getsize(f) for f in head["files"])
         n_out = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-        batch_dir = os.path.join(root, _DATA_DIR, uuid.uuid4().hex)
-        (
+        added = _write_files(
             snap.withColumn("_z", z)
             .repartitionByRange(n_out, "_z")
             .sortWithinPartitions("_z")
-            .select(*out_cols)
-            .write.mode("errorifexists")
-            .parquet(batch_dir)
+            .select(*out_cols),
+            root,
         )
-        new_files = sorted(
-            os.path.join(batch_dir, f)
-            for f in os.listdir(batch_dir)
-            if f.endswith(".parquet")
-        )
-        manifest = {
-            "version": head_v + 1,
+        return {
             "operation": "ZORDER",
             "schema": head["schema"],
-            "files": new_files,
-            "stats": _file_stats(spark, new_files, head["schema"], cols),
+            "files": added,
+            "stats": _file_stats(spark, added, head["schema"], cols),
             "clustered_by": cols,
         }
-        if _try_commit(root, head_v + 1, manifest):
-            return head_v + 1
-    raise RuntimeError(f"could not commit to {root} after {max_commit_retries} retries")
+
+    return _commit(root, build)
 
 
 def vacuum(
@@ -832,9 +728,7 @@ def vacuum(
     manifest entries) set lookups and one listing of ``data/``; no Spark
     job, no data reads."""
     root = os.path.abspath(root)
-    versions = list_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {root}")
+    versions = _committed_versions(root)
     if retain_last < 1:
         raise ValueError("retain_last must be >= 1 (the head is never vacuumed)")
     retained = versions[-retain_last:]
@@ -874,43 +768,22 @@ def vacuum(
 def history(spark: SparkSession, root: str) -> DataFrame:
     """Commit history of the table (Delta ``DESCRIBE HISTORY`` twin):
     one row per retained commit — version, commit timestamp, operation
-    (APPEND/MERGE/DELETE/OPTIMIZE/ZORDER), live-file count, and the
-    files added/removed vs the previous retained commit.
+    (APPEND/MERGE/DELETE/OPTIMIZE/ZORDER/RESTORE), live-file count, and
+    the files added/removed vs the previous retained commit.
 
     Pure driver-side manifest metadata (no data files opened); the
     result is a small DataFrame so it composes with the SQL surface
-    like any other relation.  Commits written before operation stamping
-    report operation NULL."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
+    like any other relation."""
     root = os.path.abspath(root)
-    versions = list_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {root}")
     rows = []
     prev_files: set[str] | None = None
-    for v in versions:
+    for v in _committed_versions(root):
         m = _read_manifest(root, v)
         files = set(m["files"])
         added = len(files - prev_files) if prev_files is not None else len(files)
         removed = len(prev_files - files) if prev_files is not None else 0
         rows.append(
-            (
-                v,
-                float(m.get("committed_at") or _commit_time(root, v)),
-                m.get("operation"),
-                len(files),
-                added,
-                removed,
-            )
+            (v, float(m["committed_at"]), m["operation"], len(files), added, removed)
         )
         prev_files = files
     st = StructType(
@@ -945,7 +818,7 @@ def idempotent_append(
     return append(df, root)
 
 
-def restore(spark: SparkSession, root: str, version: int, max_commit_retries: int = 10) -> int:
+def restore(spark: SparkSession, root: str, version: int) -> int:
     """Delta ``RESTORE TABLE ... TO VERSION AS OF`` twin: roll the table
     HEAD back to ``version``'s snapshot by committing a NEW version
     whose file list / schema / stats are the target's — a
@@ -969,16 +842,13 @@ def restore(spark: SparkSession, root: str, version: int, max_commit_retries: in
             f"cannot restore {root} to v{version}: {len(missing)} data files "
             f"vacuumed (first: {missing[0]})"
         )
-    for _ in range(max_commit_retries):
-        head = list_versions(root)[-1]
-        manifest = {
-            "version": head + 1,
+    return _commit(
+        root,
+        lambda head: {
             "operation": "RESTORE",
             "restored_version": version,
             "schema": target["schema"],
             "files": target["files"],
-            "stats": target.get("stats", {}),
-        }
-        if _try_commit(root, head + 1, manifest):
-            return head + 1
-    raise RuntimeError(f"could not commit restore to {root}")
+            "stats": target["stats"],
+        },
+    )

@@ -172,36 +172,60 @@ def test_in_band_verdicts() -> None:
     assert got == {"a": True, "b": False, "c": None, "d": None}
 
 
-def test_current_bands_from_real_history_and_compact_carries_verdicts() -> None:
-    """End-to-end over the in-repo artifact history: the derived
-    tracking bands must cover every TRACKING_QUERIES member that has
-    parsed history, and the compact line must carry both verdict maps."""
+#: tracking queries the synthetic history below measures; the rest of
+#: TRACKING_QUERIES has no history and must stay band-absent
+_LEGACY_TRACKING = (
+    "sim_hnsw_search",
+    "dedup_containment_ensemble",
+    "text_bpe_iterative_deep",
+    "stream_ann_refresh",
+)
+
+
+def _write_artifact_history(repo_dir) -> None:
+    """Four official artifacts: r01's driver capture did not parse, and
+    r02-r04 carry q1 at 1.0/2.0/4.0 s and every legacy tracking query at
+    2.0/3.0/5.0 s."""
+    (repo_dir / "BENCH_r01.json").write_text(json.dumps({"parsed": None}))
+    for r, q1, tracked in ((2, 1.0, 2.0), (3, 2.0, 3.0), (4, 4.0, 5.0)):
+        parsed = {
+            "queries": {"q1_pricing_summary": q1},
+            "tracking": {n: tracked for n in _LEGACY_TRACKING},
+        }
+        (repo_dir / f"BENCH_r{r:02d}.json").write_text(json.dumps({"parsed": parsed}))
+
+
+def test_current_bands_from_artifact_history_and_compact_carries_verdicts(
+    tmp_path, monkeypatch
+) -> None:
+    """End-to-end over a fixed artifact history: the derived tracking
+    bands cover every TRACKING_QUERIES member, queries with no parsed
+    history are band-ABSENT (None, never silently in-band), and the
+    compact line carries both verdict maps."""
     bench = _bench()
-    bands = bench.current_bands()
+    _write_artifact_history(tmp_path)
+    bands = bench.current_bands(repo_dir=str(tmp_path))
+    assert bands["rounds"] == [2, 3, 4]
     assert set(bands["tracking"]) == set(bench.TRACKING_QUERIES)
-    # r11+ artifacts carry tracking values for the original four ->
-    # bands derived, not None; the r14 ADDITIONS (sim_knn_graph,
-    # dedup_semdedup_clustered) have no parsed history yet and must be
-    # band-ABSENT (None), never silently in-band, until official
-    # artifacts accumulate
-    legacy = (
-        "sim_hnsw_search",
-        "dedup_containment_ensemble",
-        "text_bpe_iterative_deep",
-        "stream_ann_refresh",
-    )
-    assert all(bands["tracking"][n] is not None for n in legacy)
+    want = (round(3.0 * 0.85, 4), round(3.0 * 1.15, 4))
     for n in bench.TRACKING_QUERIES:
-        if n not in legacy:
-            assert bands["tracking"][n] is None, n
-    assert bands["headline"].get("q1_pricing_summary") is not None
+        assert bands["tracking"][n] == (want if n in _LEGACY_TRACKING else None), n
+    assert bands["headline"] == {
+        "q1_pricing_summary": (round(2.0 * 0.85, 4), round(2.0 * 1.15, 4))
+    }
+    real_current_bands = bench.current_bands
+    monkeypatch.setattr(
+        bench, "current_bands", lambda repo_dir=None: real_current_bands(str(tmp_path))
+    )
     attempts = [_fake_attempt(bench, 0.1 * i) for i in range(2)]
     compact = json.loads(bench.artifact_lines(attempts[0], attempts, 0.1)[1])
-    assert set(compact["tracking_in_band"]) == set(bench.TRACKING_QUERIES)
-    assert all(
-        v in (True, False, None) for v in compact["headline_in_band"].values()
-    )
-    assert compact["bands_from"] == bands["rounds"]
-    # the synthetic 6.7891-s tracking values sit far outside every real
-    # band -> the verdict actually trips False (not silently True)
-    assert False in set(compact["tracking_in_band"].values())
+    assert compact["bands_from"] == [2, 3, 4]
+    # the synthetic 6.7891-s tracking values sit far outside every
+    # derived band -> the verdict actually trips False (not silently
+    # True); band-absent queries report None
+    assert compact["tracking_in_band"] == {
+        n: (False if n in _LEGACY_TRACKING else None) for n in bench.TRACKING_QUERIES
+    }
+    # headline verdicts cover the queries with history: q1's 1.2345 s
+    # lies below its [1.7, 2.3] band
+    assert compact["headline_in_band"] == {"q1_pricing_summary": False}

@@ -212,6 +212,33 @@ def test_concurrent_appends_both_commit(spark, root):
     assert rows == ["seed", "w0", "w1", "w2", "w3"]
 
 
+def test_merge_lost_race_retries_on_new_head(spark, root, monkeypatch):
+    """A competing append commits between the merge's build and its
+    manifest create: the merge loses the O_EXCL race, recomputes its
+    touched files on the new head and commits one version later."""
+    V.append(_df(spark, [("a", 1), ("b", 2)]).coalesce(1), root)  # v1
+    merge_heads = []
+    replace_files = V._replace_files
+
+    def racing_replace_files(head, op, removed, added):
+        manifest = replace_files(head, op, removed, added)
+        if op == "MERGE":
+            merge_heads.append(head["version"])
+            if len(merge_heads) == 1:
+                V.append(_df(spark, [("c", 3), ("x", 7)]).coalesce(1), root)  # v2
+        return manifest
+
+    monkeypatch.setattr(V, "_replace_files", racing_replace_files)
+    v = V.merge_upsert(_df(spark, [("a", 10), ("c", 30), ("d", 4)]), root, key="k")
+    assert merge_heads == [1, 2]  # built on v1, lost, rebuilt on v2
+    assert v == 3 and V.list_versions(root) == [1, 2, 3]
+    # the competing rows survive and the retried merge saw them: the
+    # competitor's 'c' is updated, not duplicated
+    rows = sorted(map(tuple, V.read(spark, root).collect()))
+    assert rows == [("a", 10), ("b", 2), ("c", 30), ("d", 4), ("x", 7)]
+    assert V._read_manifest(root, 3)["operation"] == "MERGE"
+
+
 def test_schema_evolution_adds_columns_nulls_for_old_files(spark, root):
     V.append(_df(spark, [("a", 1)]), root)
     wider = spark.createDataFrame([("b", 2, "x")], "k string, n int, extra string")
@@ -315,6 +342,9 @@ def test_table_changes_compact_is_silent(spark, root):
 
 
 def test_table_changes_bad_version(spark, root):
+    # no commits: the head-relative feed has no head, same error as read
+    with pytest.raises(FileNotFoundError):
+        V.table_changes(spark, root, 1)
     V.append(_df(spark, [("a", 1)]), root)
     import pytest as _pt
 
